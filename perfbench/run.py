@@ -89,6 +89,15 @@ def _settings(cores: int) -> dict:
             "work": work, "env": env}
 
 
+def _stop_jvm(gateway) -> None:
+    """Close the py4j gateway and wait for the JVM to exit (it exits when
+    its stdin closes), so a run leaves no process behind."""
+    proc = gateway.proc
+    gateway.shutdown()
+    proc.stdin.close()
+    proc.wait(timeout=60)
+
+
 def _rep(spark, w, i: int, span: str | None) -> dict:
     """Run rep ``i`` of workload ``w`` inside job group ``span`` (no group
     when None), then, outside timing, inspect its executed plans and check
@@ -201,7 +210,9 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
                 if "layer" in rec:
                     side.extras(j, rec["layer"])
                 side_recs.append(rec)
+        gateway = spark.sparkContext._gateway
         spark.stop()
+        _stop_jvm(gateway)
     finally:
         rss.stop()
 
