@@ -24,6 +24,12 @@ behaviour (georgeakulov/json-schema):
   (``compilers/UnevaluatedItemsCompiler.java:50-160``);
 * memoized compilation with cycle support
   (``compilers/CompileContext.java:66-128``).
+
+Annotations exist only to feed ``unevaluatedItems`` /
+``unevaluatedProperties``, so they are tracked only when the compiled
+graph holds one of those validators. Without one, every schema node
+returns ``ann=None``, ``anyOf`` stops at its first passing branch, and
+the verdict-only (``collect_errors=False``) kernel renders no message.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Any, Callable, Optional
 
 from ..functions import content as content_mod
@@ -45,7 +52,6 @@ from .jsonvalue import (
     strict_key,
     parse_json,
     to_decimal,
-    type_matches,
 )
 from .messages import (
     jackson_as_text,
@@ -126,6 +132,37 @@ def _ann_merge(dst, src):
         dst[3] = True
 
 
+# Python classes of each JSON type name ("integer" is "number" plus an
+# integral-value test, see _type_predicate)
+_TYPE_CLASSES = {
+    "null": (type(None),),
+    "boolean": (bool,),
+    "string": (str,),
+    "number": (int, float, Decimal),
+    "array": (list, tuple),
+    "object": (dict,),
+}
+
+
+def _type_predicate(types: tuple) -> Callable[[Any], bool]:
+    """``lambda v: any(type_matches(v, t) for t in types)`` resolved at
+    compile time: one isinstance test against the union of the types'
+    classes. bool subclasses int but is never a JSON number, so it is
+    decided first."""
+    classes = tuple(c for t in set(types) for c in _TYPE_CLASSES.get(t, ()))
+    bool_ok = "boolean" in types
+    integral_only = "integer" in types and "number" not in types
+
+    def pred(v):
+        if isinstance(v, bool):
+            return bool_ok
+        if isinstance(v, classes):
+            return True
+        return integral_only and is_integerish(v)
+
+    return pred
+
+
 # Keywords the reference's unevaluated* transformers pull out of the
 # per-node validator map and run INSIDE themselves, gated on the
 # instance's JSON type (UnevaluatedItemsCompiler.java:22-33 AWAITED =
@@ -200,6 +237,17 @@ class _Compiler:
         self.registry = registry
         self.config = config
         self._memo: dict[int, Callable] = {}
+        # [True] once _build registers an unevaluated* validator, the
+        # only consumer of annotations. Schema nodes read it per call,
+        # so freeze() fixes it before the first validation.
+        self._annotate = [False]
+        self._frozen = False
+
+    def freeze(self) -> bool:
+        """Fix annotation tracking; every node that runtime $dynamicRef /
+        $recursiveRef resolution can reach must be compiled by now."""
+        self._frozen = True
+        return self._annotate[0]
 
     # a validator is fn(inst, path, scope) -> (ok: bool,
     #   errors: list[(path, keyword, msg)] | None, ann: list | None)
@@ -394,6 +442,13 @@ class _Compiler:
         # BasePropertiesCollectorValidator.java:27-41; reference-probe
         # verified for both drafts). unevaluatedItems transforms first,
         # so when both are present it owns the shared in-place keywords.
+        if ("unevaluatedItems" in node or "unevaluatedProperties" in node) and post7:
+            if self._frozen and not self._annotate[0]:
+                # nodes already compiled drop their annotations; a late
+                # consumer would pass vacuously on ann=None
+                raise SchemaCompileError(
+                    "unevaluated* keyword reached after compilation")
+            self._annotate[0] = True
         if "unevaluatedItems" in node and post7:
             moved = [fn for tag, fn in kws if tag in _UNEVAL_ITEMS_ABSORBS]
             kws = [(tag, fn) for tag, fn in kws if tag not in _UNEVAL_ITEMS_ABSORBS]
@@ -406,9 +461,10 @@ class _Compiler:
                 moved, self._kw_unevaluated_properties(node["unevaluatedProperties"]), dict))
 
         collect = self.config.collect_errors
+        annotate = self._annotate
 
         def schema_validator(inst, path, scope, _kws=tuple(fn for _, fn in kws)):
-            ann = _new_ann()
+            ann = _new_ann() if annotate[0] else None
             errors = [] if collect else None
             ok = True
             for kv in _kws:
@@ -437,10 +493,6 @@ class _Compiler:
 
     def _sub(self, node: Any) -> Callable:
         return self.compile_node(node)
-
-    def _err(self, errors, path, kw, msg):
-        if errors is not None:
-            errors.append((path, kw, msg))
 
     # ------------------------------------------------------- references
 
@@ -523,15 +575,18 @@ class _Compiler:
             if t not in ("null", "boolean", "string", "number", "integer", "array", "object"):
                 raise SchemaCompileError(f"unknown type {t!r}")
         # treat-as-array: "array" accepts any node (TypeCompiler.java:96-103)
-        taa = self.config.treat_as_array and "array" in types
+        if self.config.treat_as_array and "array" in types:
+            return lambda inst, path, scope, ann, errors: True
+        pred = _type_predicate(types)
 
         def kv(inst, path, scope, ann, errors, _arg=arg):
-            if taa or any(type_matches(inst, t) for t in types):
+            if pred(inst):
                 return True
             # TypeCompiler.java:61-66: args = (instance.asText(), the
             # raw type keyword node)
-            self._err(errors, path, "type", render_message(
-                "TYPE", jackson_as_text(inst), jackson_to_string(_arg)))
+            if errors is not None:
+                errors.append((path, "type", render_message(
+                    "TYPE", jackson_as_text(inst), jackson_to_string(_arg))))
             return False
 
         return kv
@@ -549,8 +604,9 @@ class _Compiler:
             except TypeError:
                 pass
             # EnumCompiler.java:57: args = (node, the enum array node)
-            self._err(errors, path, "enum", render_message(
-                "ENUM", jackson_to_string(inst), jackson_to_string(_values)))
+            if errors is not None:
+                errors.append((path, "enum", render_message(
+                    "ENUM", jackson_to_string(inst), jackson_to_string(_values))))
             return False
 
         return kv
@@ -563,8 +619,9 @@ class _Compiler:
             if const_equal(inst, value):
                 return True
             # ConstCompiler.java:37: args = (node, schemaNode)
-            self._err(errors, path, "const", render_message(
-                "CONST", jackson_to_string(inst), jackson_to_string(value)))
+            if errors is not None:
+                errors.append((path, "const", render_message(
+                    "CONST", jackson_to_string(inst), jackson_to_string(value))))
             return False
 
         return kv
@@ -593,8 +650,9 @@ class _Compiler:
                 return True
             # MaximumCompiler.java:33 etc: args = (instance node,
             # schema node)
-            self._err(errors, path, kw, render_message(
-                kind, jackson_to_string(inst), jackson_to_string(_arg)))
+            if errors is not None:
+                errors.append((path, kw, render_message(
+                    kind, jackson_to_string(inst), jackson_to_string(_arg))))
             return False
 
         return kv
@@ -614,9 +672,10 @@ class _Compiler:
             if ok:
                 return True
             # MultipleOfCompiler.java:44: args = (node, schemaNode)
-            self._err(errors, path, "multipleOf", render_message(
-                "MULTIPLE_OF", jackson_to_string(inst),
-                jackson_to_string(arg)))
+            if errors is not None:
+                errors.append((path, "multipleOf", render_message(
+                    "MULTIPLE_OF", jackson_to_string(inst),
+                    jackson_to_string(arg))))
             return False
 
         return kv
@@ -663,8 +722,8 @@ class _Compiler:
                 return True
             # PatternCompiler.java:44: args = (node.asText(), pattern) —
             # both raw strings, no JSON quoting
-            self._err(errors, path, "pattern",
-                      render_message("PATTERN", inst, pattern))
+            if errors is not None:
+                errors.append((path, "pattern", render_message("PATTERN", inst, pattern)))
             return False
 
         return kv
@@ -681,12 +740,12 @@ class _Compiler:
             # — two args against three placeholders, so {2} stays
             # literal (MessageFormat drops nothing silently)
             if lo_i is not None and n < lo_i:
-                self._err(errors, path, "minLength",
-                          render_message("MIN_LENGTH", lo_i, n))
+                if errors is not None:
+                    errors.append((path, "minLength", render_message("MIN_LENGTH", lo_i, n)))
                 return False
             if hi_i is not None and n > hi_i:
-                self._err(errors, path, "maxLength",
-                          render_message("MAX_LENGTH", hi_i, n))
+                if errors is not None:
+                    errors.append((path, "maxLength", render_message("MAX_LENGTH", hi_i, n)))
                 return False
             return True
 
@@ -723,8 +782,9 @@ class _Compiler:
                 return True
             # FormatCompiler.java:109: args = (instance NODE, format) —
             # the node renders with its JSON quotes
-            self._err(errors, path, "format", render_message(
-                "FORMAT", jackson_to_string(inst), name))
+            if errors is not None:
+                errors.append((path, "format", render_message(
+                    "FORMAT", jackson_to_string(inst), name)))
             return False
 
         return kv
@@ -747,24 +807,25 @@ class _Compiler:
                 if not ok:
                     # ContentUtils.java:36-41: arg = the contentEncoding
                     # keyword value
-                    self._err(errors, path, "contentEncoding",
-                              render_message("CONTENT_ENCODING", encoding))
+                    if errors is not None:
+                        errors.append((path, "contentEncoding",
+                                       render_message("CONTENT_ENCODING", encoding)))
                     return False
             parsed = None
             have_parsed = False
             if media is not None:
                 if text is None:
-                    self._err(errors, path, "contentMediaType",
-                              render_message("CONTENT_TYPE",
-                                             mime_type_str(media)))
+                    if errors is not None:
+                        errors.append((path, "contentMediaType",
+                                       render_message("CONTENT_TYPE", mime_type_str(media))))
                     return False
                 ok, parsed = content_mod.parse_media_type(media, text, mt_over)
                 if not ok:
                     # ContentUtils.java:46-51: arg = the parsed MimeType
                     # OBJECT, rendered via its debug toString()
-                    self._err(errors, path, "contentMediaType",
-                              render_message("CONTENT_TYPE",
-                                             mime_type_str(media)))
+                    if errors is not None:
+                        errors.append((path, "contentMediaType",
+                                       render_message("CONTENT_TYPE", mime_type_str(media))))
                     return False
                 # JSON null parses to None and must still reach the
                 # subschema — gate on "a parser exists", not on the value
@@ -772,10 +833,9 @@ class _Compiler:
             if sub is not None and have_parsed:
                 ok, errs, _ = sub(parsed, path, scope)
                 if not ok:
-                    if errs and errors is not None:
-                        errors.extend(errs)
-                    self._err(errors, path, "contentSchema",
-                              render_message("CONTENT_SCHEMA"))
+                    if errors is not None:
+                        errors.extend(errs or ())
+                        errors.append((path, "contentSchema", render_message("CONTENT_SCHEMA")))
                     return False
             return True
 
@@ -798,8 +858,7 @@ class _Compiler:
             # RequiredCompiler.java:40,52-54: ONE error joining every
             # missing name — in the HashSet's iteration order
             # (Collectors.toSet()), not declaration order
-            self._err(errors, path, "required",
-                      render_message("REQUIRED", ",".join(missing)))
+            errors.append((path, "required", render_message("REQUIRED", ",".join(missing))))
             return False
 
         return kv
@@ -814,12 +873,14 @@ class _Compiler:
             n = len(inst)
             # Min/MaxPropertiesCompiler.java:41-43: args = (limit, size)
             if lo_i is not None and n < lo_i:
-                self._err(errors, path, "minProperties",
-                          render_message("MIN_PROPERTIES", lo_i, n))
+                if errors is not None:
+                    errors.append((path, "minProperties",
+                                   render_message("MIN_PROPERTIES", lo_i, n)))
                 return False
             if hi_i is not None and n > hi_i:
-                self._err(errors, path, "maxProperties",
-                          render_message("MAX_PROPERTIES", hi_i, n))
+                if errors is not None:
+                    errors.append((path, "maxProperties",
+                                   render_message("MAX_PROPERTIES", hi_i, n)))
                 return False
             return True
 
@@ -839,14 +900,15 @@ class _Compiler:
                 # DependentRequiredCompiler.java:55-59: ONE error
                 # joining the TRIGGERING property of every violated
                 # rule (not the missing names)
-                self._err(errors, path, kw, render_message(
-                    "DEPENDENT_REQUIRED", ",".join(violated)))
+                if errors is not None:
+                    errors.append((path, kw, render_message(
+                        "DEPENDENT_REQUIRED", ",".join(violated))))
             else:
                 # draft-7 dual form (DependenciesCompiler.java:148-153):
                 # one error PER violated triggering property
                 for k in violated:
-                    self._err(errors, path, kw,
-                              render_message("DEPENDENCIES", k))
+                    if errors is not None:
+                        errors.append((path, kw, render_message("DEPENDENCIES", k)))
             return False
 
         return kv
@@ -878,12 +940,11 @@ class _Compiler:
             for k in inst:
                 s_ok, errs, _ = sub(k, path + (k,), scope)
                 if not s_ok:
-                    self._err(errors, path + (k,), "propertyNames", f"invalid property name {k!r}")
-                    if errs and errors is not None:
-                        errors.extend(errs)
-                    ok = False
                     if errors is None:
                         return False
+                    errors.append((path + (k,), "propertyNames", f"invalid property name {k!r}"))
+                    errors.extend(errs or ())
+                    ok = False
             return ok
 
         return kv
@@ -944,8 +1005,8 @@ class _Compiler:
                             and errors is not None):
                         s_ok, errs, _ = add_sub(v, path + (k,), scope)
                         if not s_ok:
-                            self._err(errors, path + (k,), "additionalProperties",
-                                      f"additional property {k!r} invalid")
+                            errors.append((path + (k,), "additionalProperties",
+                                           f"additional property {k!r} invalid"))
                             if errs:
                                 errors.extend(errs)
                 elif add_sub is not None:
@@ -954,7 +1015,8 @@ class _Compiler:
                         ok = False
                         if errors is None:
                             return False
-                        self._err(errors, path + (k,), "additionalProperties", f"additional property {k!r} invalid")
+                        errors.append((path + (k,), "additionalProperties",
+                                       f"additional property {k!r} invalid"))
                         if errs:
                             errors.extend(errs)
                     else:
@@ -1045,8 +1107,8 @@ class _Compiler:
             # Error-surface only — the verdict is already false.
             s_ok, errs, _ = add_sub(v, path + (i,), scope)
             if not s_ok:
-                self._err(errors, path + (i,), "additionalItems",
-                          f"item {i} invalid against additionalItems")
+                errors.append((path + (i,), "additionalItems",
+                               f"item {i} invalid against additionalItems"))
                 if errs:
                     errors.extend(errs)
 
@@ -1121,12 +1183,11 @@ class _Compiler:
                     _ann_add_item_idx(ann, matched)
                 return True
             # ContainsCompilerFactory.java:84-88: args = (bound, matched)
-            if n < lo_eff:
-                self._err(errors, path, "contains",
-                          render_message("CONTAINS_MIN", lo_eff, n))
-            else:
-                self._err(errors, path, "maxContains",
-                          render_message("CONTAINS_MAX", hi, n))
+            if errors is not None:
+                if n < lo_eff:
+                    errors.append((path, "contains", render_message("CONTAINS_MIN", lo_eff, n)))
+                else:
+                    errors.append((path, "maxContains", render_message("CONTAINS_MAX", hi, n)))
             return False
 
         return kv
@@ -1141,15 +1202,16 @@ class _Compiler:
             n = len(inst)
             if lo_i is not None and n < lo_i:
                 # MinItemsCompiler.java:39: args = (limit, size)
-                self._err(errors, path, "minItems",
-                          render_message("MIN_ITEMS", lo_i, n))
+                if errors is not None:
+                    errors.append((path, "minItems", render_message("MIN_ITEMS", lo_i, n)))
                 return False
             if hi_i is not None and n > hi_i:
                 # MaxItemsCompiler.java:35 passes the KEYWORD as {0}
                 # and the limit as {1} — the actual size arg has no
                 # placeholder. Faithfully odd.
-                self._err(errors, path, "maxItems",
-                          render_message("MAX_ITEMS", "maxItems", hi_i, n))
+                if errors is not None:
+                    errors.append((path, "maxItems",
+                                   render_message("MAX_ITEMS", "maxItems", hi_i, n)))
                 return False
             return True
 
@@ -1169,8 +1231,9 @@ class _Compiler:
                 if k in seen:
                     # UniqueItemsCompiler.java:46: arg = the duplicate
                     # item's instance JsonPointer
-                    self._err(errors, path, "uniqueItems", render_message(
-                        "UNIQUE_ITEMS", _format_pointer(path + (i,))))
+                    if errors is not None:
+                        errors.append((path, "uniqueItems", render_message(
+                            "UNIQUE_ITEMS", _format_pointer(path + (i,)))))
                     return False
                 seen.add(k)
             return True
@@ -1316,16 +1379,19 @@ class _Compiler:
             for sub in subs:
                 s_ok, errs, s_ann = sub(inst, path, scope)
                 if s_ok:
+                    if ann is None:
+                        # no annotation consumer: the later branches
+                        # cannot change the result, and on success the
+                        # failed branches' errors are dropped anyway
+                        return True
                     any_ok = True
                     _ann_merge(ann, s_ann)
-                    if ann is None and errors is None:
-                        return True  # fast path may short-circuit
                 elif errs:
                     all_errs.extend(errs)
             if not any_ok:
                 if errors is not None:
                     errors.extend(all_errs)
-                self._err(errors, path, "anyOf", render_message("ANY_OF"))
+                    errors.append((path, "anyOf", render_message("ANY_OF")))
             return any_ok
 
         return kv
@@ -1346,8 +1412,9 @@ class _Compiler:
             if n_ok == 1:
                 _ann_merge(ann, ok_ann)
                 return True
-            self._err(errors, path, "oneOf", render_message(
-                "ONE_OF_EMPTY" if n_ok == 0 else "ONE_OF_MORE_THAN_ONE"))
+            if errors is not None:
+                errors.append((path, "oneOf", render_message(
+                    "ONE_OF_EMPTY" if n_ok == 0 else "ONE_OF_MORE_THAN_ONE")))
             return False
 
         return kv
@@ -1358,7 +1425,8 @@ class _Compiler:
         def kv(inst, path, scope, ann, errors):
             s_ok, _, _ = sub(inst, path, scope)
             if s_ok:
-                self._err(errors, path, "not", render_message("NOT"))
+                if errors is not None:
+                    errors.append((path, "not", render_message("NOT")))
                 return False
             return True
 
@@ -1381,9 +1449,9 @@ class _Compiler:
                 if s_ok:
                     _ann_merge(ann, s_ann)
                     return True
-                if errs and errors is not None:
-                    errors.extend(errs)
-                self._err(errors, path, "then", "'then' schema failed")
+                if errors is not None:
+                    errors.extend(errs or ())
+                    errors.append((path, "then", "'then' schema failed"))
                 return False
             if else_sub is None:
                 return True
@@ -1391,9 +1459,9 @@ class _Compiler:
             if s_ok:
                 _ann_merge(ann, s_ann)
                 return True
-            if errs and errors is not None:
-                errors.extend(errs)
-            self._err(errors, path, "else", "'else' schema failed")
+            if errors is not None:
+                errors.extend(errs or ())
+                errors.append((path, "else", "'else' schema failed"))
             return False
 
         return kv
@@ -1423,7 +1491,7 @@ class _Compiler:
                             return False
                         if errs:
                             errors.extend(errs)
-                        self._err(errors, path, kw, f"schema dependency on {k!r} failed")
+                        errors.append((path, kw, f"schema dependency on {k!r} failed"))
             return ok
 
         return kv
@@ -1449,7 +1517,8 @@ class _Compiler:
                     ok = False
                     if errors is None:
                         return False
-                    self._err(errors, path + (i,), "unevaluatedItems", f"unevaluated item at {i} invalid")
+                    errors.append((path + (i,), "unevaluatedItems",
+                                   f"unevaluated item at {i} invalid"))
                     if errs:
                         errors.extend(errs)
             if ok:
@@ -1475,7 +1544,8 @@ class _Compiler:
                     ok = False
                     if errors is None:
                         return False
-                    self._err(errors, path + (k,), "unevaluatedProperties", f"unevaluated property {k!r} invalid")
+                    errors.append((path + (k,), "unevaluatedProperties",
+                                   f"unevaluated property {k!r} invalid"))
                     if errs:
                         errors.extend(errs)
                 else:
@@ -1498,10 +1568,13 @@ class CompiledSchema:
     times (rows / Arrow batches) — the Spark analogue of the reference's
     ``Schema`` closure (``Schema.java:17-23``)."""
 
-    def __init__(self, root_validator: Callable, schema: Any, config: CompileConfig):
+    def __init__(self, root_validator: Callable, schema: Any, config: CompileConfig,
+                 tracks_annotations: bool):
         self._v = root_validator
         self.schema = schema
         self.config = config
+        # whether the compiled graph holds an unevaluated* validator
+        self.tracks_annotations = tracks_annotations
 
     def validate(self, instance: Any) -> tuple[bool, list[tuple[str, str, str]]]:
         """Validate a parsed JSON value → (ok, [(json_pointer, keyword, message)])."""
@@ -1556,4 +1629,4 @@ def compile_schema(
         compiler.compile_node(node)
     for uri_ in list(registry.recursive_roots):
         compiler.compile_node(registry.docs[uri_])
-    return CompiledSchema(root, schema, config)
+    return CompiledSchema(root, schema, config, compiler.freeze())

@@ -209,20 +209,25 @@ class SparkValidator:
         _, checks = self._expr_checks_json(doc)
         return ok_of(checks), violations_array(checks)
 
+    def _kernel_loader(self, collect: bool):
+        """Executor-side kernel getter for the UDFs: captures plain values
+        only (never ``self``), keyed for the per-worker kernel cache."""
+        key = (self._schema_json, self._docs_json, self.dialect,
+               self.config.format_assertions, self.config.content_mode, collect,
+               self._formats_key, self.config.treat_as_array)
+        args = (key, self._schema_json, self._docs_json, self.dialect,
+                self.config.format_assertions, self.config.content_mode, collect,
+                self.custom_formats, self.config.treat_as_array, self.regex_factory,
+                self.content_encodings, self.content_media_types)
+        return lambda: _executor_kernel(*args)
+
     def _udf_result(self) -> "F.pandas_udf":
         self.kernel  # fail fast driver-side (Java-only regex schemas)
-        key = (self._schema_json, self._docs_json, self.dialect,
-               self.config.format_assertions, self.config.content_mode, True,
-               self._formats_key, self.config.treat_as_array)
-        schema_json, docs_json, dialect = self._schema_json, self._docs_json, self.dialect
-        fmt, cmode = self.config.format_assertions, self.config.content_mode
-        customs, taa = self.custom_formats, self.config.treat_as_array
-        rfac, cenc, cmt = self.regex_factory, self.content_encodings, self.content_media_types
+        load = self._kernel_loader(True)
 
         @F.pandas_udf(_RESULT_SCHEMA)
         def validate_batch(docs: pd.Series) -> pd.DataFrame:
-            kernel = _executor_kernel(key, schema_json, docs_json, dialect, fmt, cmode, True,
-                                      customs, taa, rfac, cenc, cmt)
+            kernel = load()
             valids, viols = [], []
             for doc in docs:
                 if doc is None:
@@ -241,19 +246,11 @@ class SparkValidator:
     def udf_valid(self) -> "F.pandas_udf":
         """Boolean-only vectorized verdict UDF (fast mode — no error
         materialization, mirrors the kernel's non-collecting path)."""
-        key = (self._schema_json, self._docs_json, self.dialect,
-               self.config.format_assertions, self.config.content_mode, False,
-               self._formats_key, self.config.treat_as_array)
-        schema_json, docs_json, dialect = self._schema_json, self._docs_json, self.dialect
-        fmt, cmode = self.config.format_assertions, self.config.content_mode
-        customs, taa = self.custom_formats, self.config.treat_as_array
-        rfac, cenc, cmt = self.regex_factory, self.content_encodings, self.content_media_types
+        load = self._kernel_loader(False)
 
         @F.pandas_udf("boolean")
         def valid_batch(docs: pd.Series) -> pd.Series:
-            kernel = _executor_kernel(key, schema_json, docs_json, dialect, fmt, cmode, False,
-                                      customs, taa, rfac, cenc, cmt)
-            f = kernel.is_valid_json
+            f = load().is_valid_json
             return docs.map(lambda d: None if d is None else f(d))
 
         return valid_batch

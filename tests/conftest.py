@@ -18,3 +18,19 @@ def ref(tmp_path_factory):
     from tests.test_reference_differential import build_reference_probe
 
     return build_reference_probe(tmp_path_factory.mktemp("refbuild"))
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name every test module that skipped tests, and why, so a run that
+    lost a gate family (e.g. the compiled-reference differentials when
+    the reference sources are absent) does not read as plain green."""
+    families: dict[tuple[str, str], int] = {}
+    for rep in terminalreporter.stats.get("skipped", []):
+        module = rep.nodeid.split("::")[0]
+        reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else str(rep.longrepr)
+        key = (module, reason.removeprefix("Skipped: "))
+        families[key] = families.get(key, 0) + 1
+    if families:
+        terminalreporter.section("skipped gate families")
+        for (module, reason), n in sorted(families.items()):
+            terminalreporter.write_line(f"{module}: {n} skipped ({reason})")

@@ -24,10 +24,11 @@ import random
 import pytest
 
 from tests import differential_gen as gen
-from tests.test_reference_differential import (
+from tests.test_reference_differential import (  # noqa: F401
     _DIALECTS,
     _corpus_cases,
     _ref_triples,
+    pytestmark,
 )
 
 

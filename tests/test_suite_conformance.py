@@ -10,6 +10,7 @@ import pathlib
 
 import pytest
 
+from json_schema_spark.core import validator
 from json_schema_spark.core.validator import CompileConfig, compile_schema
 
 SUITE = pathlib.Path(__file__).parent / "suite"
@@ -38,3 +39,21 @@ def test_verdict(dialect, fmt, schema, data, expected):
     # fast (non-collecting) mode must agree with collecting mode
     cfg2 = CompileConfig(dialect=dialect, format_assertions=fmt, collect_errors=False)
     assert compile_schema(schema, config=cfg2).is_valid(data) is expected
+
+
+def test_verdict_only_kernel_renders_nothing(monkeypatch):
+    """The collect_errors=False kernel (behind SparkValidator.udf_valid)
+    must reject every failing suite case without rendering a message."""
+
+    def no_render(*args):
+        raise AssertionError(f"verdict-only kernel rendered {args!r}")
+
+    for name in ("render_message", "jackson_to_string", "jackson_as_text"):
+        monkeypatch.setattr(validator, name, no_render)
+    failing = [p.values for p in _cases() if p.values[4] is False]
+    assert failing
+    for dialect, fmt, schema, data, _ in failing:
+        cs = compile_schema(schema, config=CompileConfig(
+            dialect=dialect, format_assertions=fmt, collect_errors=False))
+        assert cs.validate(data) == (False, [])
+        assert cs.is_valid(data) is False
