@@ -98,7 +98,17 @@ def decontaminate(
     grams = F.broadcast(benchmark_ngrams(bench, bench_text_col, n))
     # per-doc dedup happens IN-ROW (array_distinct before explode):
     # "distinct grams hit" needs no corpus-wide distinct shuffle
-    probe = docs if gram_source is None else gram_source
+    if gram_source is None:
+        probe = docs
+    else:
+        missing = [c for c in (id_col, text_col)
+                   if c not in gram_source.columns]
+        if missing:
+            raise ValueError(
+                f"gram_source lacks column(s) {missing}: it must be a "
+                f"superset of docs carrying the same {id_col!r}/"
+                f"{text_col!r} columns with identical (id, text) pairs")
+        probe = gram_source
     doc_grams = probe.select(
         F.col(id_col).alias(_HIT_ID),
         F.explode(F.array_distinct(_gram_col(F.col(text_col), n))).alias("gram"),

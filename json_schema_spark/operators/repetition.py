@@ -237,8 +237,12 @@ def repetition_features(
     # a multiply-referenced non-trivial alias un-inlined), the outer
     # select fans its fields out into the documented flat columns
     tmp = "__jss_rep_sig"
+    # re-featurizing a frame that already carries the signals (e.g.
+    # gopher_repetition_filter(keep_signals=True) output): recompute,
+    # don't duplicate the column names
+    keep = [c for c in df.columns if c not in names and c != tmp]
     return (df.withColumn(tmp, sig)
-              .select(*df.columns,
+              .select(*keep,
                       *[F.col(tmp)[n].alias(n) for n in names])
             )
 

@@ -13,25 +13,12 @@
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
 from typing import Optional
 
 import pandas as pd  # module-level so the pandas-UDF type hints resolve
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 __all__ = ["cosine", "dot", "brute_force_topk", "build_ivf", "ivf_topk"]
-
-# Trained-index cache: an IVF index is trained once and probed many
-# times — re-running the k-means collects (two full-corpus aggregate
-# jobs + a driver-side expression build) per query would be the
-# warm-path equivalent of rebuilding a B-tree per lookup. Keyed by the
-# build params; the corpus plan is matched by sameSemantics (a dead
-# session's entry fails the check and falls through to a fresh build).
-_IVF_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
-_IVF_CACHE_SLOTS = 4
-_IVF_LOCK = threading.Lock()
-
 
 def dot(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
@@ -102,8 +89,7 @@ def _argmax_assign_udf(cents_rows: list, dim: int):
 
 def build_ivf(corpus: DataFrame, n_centroids: int = 16, vec_col: str = "embedding",
               id_col: str = "vec_id", iters: int = 2,
-              max_unroll_terms: int = 4096,
-              cache: bool = True) -> tuple[DataFrame, DataFrame]:
+              max_unroll_terms: int = 4096) -> tuple[DataFrame, DataFrame]:
     """IVF training (k-means style) with ZERO corpus shuffles in the
     assignment step. Per iteration: per-cluster centroid = exact-decimal
     per-dimension SUM (cosine is scale-invariant, so the sum serves as
@@ -127,29 +113,15 @@ def build_ivf(corpus: DataFrame, n_centroids: int = 16, vec_col: str = "embeddin
     Ties break to the lowest centroid id on both paths. Seeding is
     ``item_id % n_centroids`` (ANSI-SQL-expressible, so the small-shape
     build oracles in DuckDB — hash seeding wouldn't).
-    Returns (assigned corpus with ``centroid_id``, centroids table).
-
-    The trained index is cached per (corpus plan, params): training is
-    deterministic, so a warm re-build over the same corpus returns the
-    earlier (persisted) assignment and centroids without re-running the
-    per-iteration aggregate jobs — the index-built-once usage pattern
-    IVF exists for. Pass ``cache=False`` to force a fresh build.
+    Returns (assigned corpus with ``centroid_id``, centroids table) —
+    the trained index. ``assigned`` is returned unpersisted, as a lazy
+    projection: the caller owns caching. An IVF index is built once
+    and probed many times, so a caller that probes repeatedly holds
+    the returned pair and persists ``assigned`` (or writes it bucketed
+    by ``centroid_id`` at cluster scale) instead of calling
+    ``build_ivf`` again — each call re-runs the k-means aggregate jobs.
     """
     import math
-
-    key = (n_centroids, vec_col, id_col, iters, max_unroll_terms)
-    if cache:
-        with _IVF_LOCK:
-            hit = _IVF_CACHE.get(key)
-        if hit is not None:
-            prev_corpus, prev_assigned, prev_cents = hit
-            try:
-                if prev_corpus.sameSemantics(corpus):
-                    with _IVF_LOCK:
-                        _IVF_CACHE.move_to_end(key)
-                    return prev_assigned, prev_cents
-            except Exception:
-                pass
 
     c = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("cv"))
     dim = len(c.select("cv").first()["cv"])
@@ -211,27 +183,6 @@ def build_ivf(corpus: DataFrame, n_centroids: int = 16, vec_col: str = "embeddin
         [(cid, vec) for cid, vec in cents_rows],
         "centroid_id int, centroid array<double>",
     )
-    if cache:
-        # persist the assigned corpus so warm probes read the cache
-        # instead of re-running the (codegen'd or gemm) assignment —
-        # the local stand-in for writing the index bucketed by
-        # centroid_id at cluster scale (see ivf_topk docstring)
-        assigned = assigned.persist()
-        with _IVF_LOCK:
-            prev = _IVF_CACHE.pop(key, None)
-            if prev is not None:
-                # same params, different corpus: release the stale plan
-                try:
-                    prev[1].unpersist(False)
-                except Exception:
-                    pass
-            _IVF_CACHE[key] = (corpus, assigned, cents)
-            while len(_IVF_CACHE) > _IVF_CACHE_SLOTS:
-                _, (_, old_assigned, _) = _IVF_CACHE.popitem(last=False)
-                try:
-                    old_assigned.unpersist(False)
-                except Exception:
-                    pass
     return assigned, cents
 
 

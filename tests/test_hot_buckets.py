@@ -147,13 +147,11 @@ def test_embedding_gemm_production_dim(spark):
 
 
 def test_hot_bucket_stats_survive_warm_rerun(spark):
-    """A warm re-run of an IDENTICAL capped query is deduped onto the
-    earlier plan by _persist_swap / the CacheManager, so this call's
-    Observation never fires — stats must still resolve (to the earlier
-    identical plan's values) without blocking for the full timeout."""
+    """A warm re-run of an IDENTICAL capped query is served from the
+    earlier plan's cache entry by the CacheManager — its stats must
+    still resolve (to the earlier identical plan's values) without
+    blocking for the full timeout."""
     import time
-
-    from json_schema_spark.operators import dedup as D
 
     docs = _degenerate_docs(spark)
     first = minhash_lsh_pairs(docs, threshold=0.7, max_bucket_size=50)
@@ -166,4 +164,36 @@ def test_hot_bucket_stats_survive_warm_rerun(spark):
     s2 = hot_bucket_stats("minhash_lsh", timeout=30.0)
     assert time.monotonic() - t0 < 15.0, "stats blocked on a dead Observation"
     assert s2 == s1
-    assert "minhash_lsh" not in D._HOT_BUCKET_PENDING
+
+
+def _calm_docs(spark, n=60):
+    """Distinct documents only: the cap never fires."""
+    return _degenerate_docs(spark, n_dup=0, n_normal=n)
+
+
+@pytest.mark.parametrize("op,run", [
+    ("minhash_lsh",
+     lambda d: minhash_lsh_pairs(d, threshold=0.7, max_bucket_size=50)),
+    # the prefix path's candidate join is empty after the cap, so AQE
+    # erases the observe node and the stats come from the recompute
+    ("ngram_prefix",
+     lambda d: ngram_jaccard_pairs(d, threshold=0.5, prefix_filter=True,
+                                   max_bucket_size=50)),
+])
+def test_hot_bucket_stats_per_call_when_interleaved(spark, op, run):
+    """Capped hot input, then a calm input, then the hot input again:
+    each call reports its own drop counts before it returns, and the
+    re-run (served from the first call's cache entry) equals the
+    first."""
+    hot, calm = _degenerate_docs(spark), _calm_docs(spark)
+    run(hot)
+    s1 = hot_bucket_stats(op)
+    assert s1["cap"] == 50
+    assert s1["dropped_buckets"] >= 1
+    assert s1["dropped_member_rows"] >= 120
+    run(calm)
+    s_calm = hot_bucket_stats(op)
+    assert s_calm == {"cap": 50, "dropped_buckets": 0,
+                      "dropped_member_rows": 0}
+    run(hot)
+    assert hot_bucket_stats(op) == s1

@@ -4,6 +4,7 @@ fixtures."""
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from json_schema_spark.operators.dedup import (
@@ -226,6 +227,27 @@ def test_ivf_udf_path_agrees_with_unroll(spark, emb):
     assert set(u) == set(v)
     agree = sum(u[k] == v[k] for k in u) / len(u)
     assert agree >= 0.99, f"only {agree:.3f} assignment agreement"
+
+
+def test_build_ivf_persists_nothing(spark, emb):
+    """The trained index is the returned (assigned, centroids) pair and
+    the caller owns its caching: building it leaves no persisted RDD
+    behind, and the removed ``cache`` knob is rejected."""
+    sc = spark.sparkContext
+
+    def cached_rdd_ids():
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    corpus.count()  # materialize the fixture's own cache BEFORE the baseline
+    before = cached_rdd_ids()
+    assigned, cents = build_ivf(corpus, n_centroids=8, iters=2)
+    assert assigned.count() == corpus.count()
+    cents.count()
+    assert cached_rdd_ids() == before
+    assert assigned.storageLevel == StorageLevel.NONE
+    with pytest.raises(TypeError):
+        build_ivf(corpus, n_centroids=8, cache=True)
 
 
 def test_ivf_large_shape_builds_no_corpus_exchange(spark):
@@ -522,3 +544,10 @@ def test_candidate_persist_is_bounded_not_leaked(spark, docs):
     final_ids = cached_rdd_ids() - before
     assert not (first_ids & final_ids), "oldest cache entry was never released"
     assert all(len(s) <= D._PERSIST_SLOTS for s in D._LAST_PERSISTED.values())
+
+
+def test_minhash_rejects_ungated_verify_mode(spark, docs):
+    """The ungated AQE verify mode (``max_broadcast_pairs=None``) was
+    removed: asking for it fails loudly, naming the parameter."""
+    with pytest.raises(ValueError, match="max_broadcast_pairs"):
+        minhash_lsh_pairs(docs, max_broadcast_pairs=None)

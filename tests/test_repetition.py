@@ -110,6 +110,28 @@ def test_filter_drops_repetitive_keeps_clean(spark):
         df, keep_signals=True).columns
 
 
+def test_features_recomputed_on_frame_that_carries_them(spark):
+    """Feeding gopher_repetition_filter(keep_signals=True) output back
+    into repetition_features recomputes the signals in place: column
+    names stay unique and the values follow the (changed) text."""
+    df = spark.createDataFrame(
+        [(1, "a perfectly ordinary paragraph with varied words and no "
+             "repeated phrasing anywhere in it at all because every clause "
+             "introduces fresh vocabulary about weather gardening music "
+             "history chemistry travel cooking carpentry astronomy and "
+             "several other unrelated topics for good measure")],
+        "doc_id int, text string")
+    kept = gopher_repetition_filter(df, keep_signals=True)
+    assert kept.count() == 1
+    new_text = "dup line\ndup line\ndup line\nother"
+    again = repetition_features(kept.withColumn("text", F.lit(new_text)))
+    assert len(again.columns) == len(set(again.columns))
+    assert "__jss_rep_sig" not in again.columns
+    row = again.collect()[0].asDict()
+    for k, v in _py_signals(new_text).items():
+        assert row[k] == pytest.approx(v), k
+
+
 def test_filter_threshold_subset(spark):
     df = spark.createDataFrame([(1, "x\nx\nx\nx\ny z w v u t s")],
                                "doc_id int, text string")
@@ -160,6 +182,16 @@ def test_decontaminate_normalizes_case_and_whitespace(spark):
     bench = spark.createDataFrame(
         [(9, "alpha beta gamma delta epsilon")], "qid int, text string")
     assert decontaminate(docs, bench, n=5).collect()[0].contaminated is True
+
+
+def test_decontaminate_gram_source_missing_columns(spark):
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon")], "doc_id int, text string")
+    bench = spark.createDataFrame(
+        [(9, "alpha beta gamma delta epsilon")], "qid int, text string")
+    src = docs.select(F.col("doc_id").alias("id"), "text")
+    with pytest.raises(ValueError, match=r"\['doc_id'\].*superset of docs"):
+        decontaminate(docs, bench, n=5, gram_source=src)
 
 
 def test_decontaminate_plan_has_no_corpus_shuffle(spark):
