@@ -78,10 +78,19 @@ def _java_decimal_cached(f: float) -> Decimal:
     return Decimal(java17_double_repr(f))
 
 
+# json.loads builds a new JSONDecoder on every call that passes hooks;
+# the kernel parses once per document, so share one
+_DECODER = json.JSONDecoder(parse_float=double_canonical,
+                            parse_constant=_reject_constant)
+
+
 def parse_json(text: str) -> Any:
     """Parse JSON with the reference's number model: integer literals
     exact (Jackson Int/Long/BigInteger ≙ Python int), float literals
     double-canonical Decimals (see ``double_canonical``)."""
+    if isinstance(text, str) and not text.startswith("\ufeff"):
+        return _DECODER.decode(text)
+    # bytes, a leading BOM and non-text inputs: json.loads's own checks
     return json.loads(text, parse_float=double_canonical,
                       parse_constant=_reject_constant)
 

@@ -15,6 +15,8 @@ module-level cache — compile-once / apply-many across Arrow batches.
 from __future__ import annotations
 
 import json
+import os
+import zipimport
 from typing import Any, Iterable, Optional
 
 import pandas as pd
@@ -41,6 +43,40 @@ _RESULT_SCHEMA = f"struct<valid:boolean,violations:{VIOLATION_SCHEMA}>"
 _KERNEL_CACHE: dict[tuple, CompiledSchema] = {}
 
 
+def _install_zip_stat_gate() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's zip
+    directory only when the archive file changed on disk.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. Before CPython 3.13 that re-reads the whole central
+    directory of every archive the worker imported from, pyspark.zip
+    (one zipimporter per sub-package) and the spark-core jar: about 40%
+    of the Python workers' run time on the json_kernel benchmark
+    (BASELINE.md, "round 6 · worker setup"). The wrapper keeps the
+    ``(st_mtime_ns, st_size, st_ino)`` signature an importer saw at its
+    last re-read and skips the re-read while ``os.stat`` returns the
+    same one; a changed or unreadable archive is re-read as before.
+    Idempotent."""
+    cls = zipimport.zipimporter
+    original = cls.invalidate_caches
+    if getattr(original, "_stat_gated", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            sig = None
+        if sig is not None and sig == getattr(self, "_stat_sig", None):
+            return
+        original(self)
+        self._stat_sig = sig
+
+    invalidate_caches._stat_gated = True
+    cls.invalidate_caches = invalidate_caches
+
+
 def _executor_kernel(key: tuple, schema_json: str, docs_json: str, dialect: str,
                      fmt: bool, content_mode: str, collect: bool,
                      custom_formats: Optional[dict] = None,
@@ -63,6 +99,7 @@ def _executor_kernel(key: tuple, schema_json: str, docs_json: str, dialect: str,
                             content_media_types=content_media_types or {})
         k = compile_schema(json.loads(schema_json), registry=reg, config=cfg)
         _KERNEL_CACHE[key] = k
+        _install_zip_stat_gate()
     return k
 
 
@@ -255,6 +292,19 @@ class SparkValidator:
 
         return valid_batch
 
+    def _kernel_columns(self, df: DataFrame, doc: Column,
+                        with_violations: bool) -> DataFrame:
+        """Adds the kernel UDF's ``valid`` (and ``violations``) columns;
+        the struct result rides in a reserved column, so a user column of
+        any other name survives."""
+        if not with_violations:
+            return df.withColumn("valid", self.udf_valid()(doc))
+        tmp = "__jss_result"
+        return (df.withColumn(tmp, self._udf_result()(doc))
+                  .withColumn("valid", F.col(f"{tmp}.valid"))
+                  .withColumn("violations", F.col(f"{tmp}.violations"))
+                  .drop(tmp))
+
     def apply_json(self, df: DataFrame, doc_col: str = "doc",
                    with_violations: bool = True) -> DataFrame:
         """Adds ``valid: boolean`` (and ``violations``) columns.
@@ -296,13 +346,7 @@ class SparkValidator:
             except ExprUnsupported:
                 if self.engine == "expr":
                     raise
-        if with_violations:
-            res = self._udf_result()(doc)
-            return (df.withColumn("_res", res)
-                      .withColumn("valid", F.col("_res.valid"))
-                      .withColumn("violations", F.col("_res.violations"))
-                      .drop("_res"))
-        return df.withColumn("valid", self.udf_valid()(doc))
+        return self._kernel_columns(df, doc, with_violations)
 
     # ----------------------------------------------------- typed mode
 
@@ -343,13 +387,7 @@ class SparkValidator:
                     raise
         names = list(columns) if columns is not None else df.columns
         doc = F.to_json(F.struct(*[F.col(n) for n in names]))
-        if with_violations:
-            res = self._udf_result()(doc)
-            return (df.withColumn("_res", res)
-                      .withColumn("valid", F.col("_res.valid"))
-                      .withColumn("violations", F.col("_res.violations"))
-                      .drop("_res"))
-        return df.withColumn("valid", self.udf_valid()(doc))
+        return self._kernel_columns(df, doc, with_violations)
 
     # ------------------------------------------------------- results
 

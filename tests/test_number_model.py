@@ -162,3 +162,43 @@ def test_double_canonical_zero_sign_not_cache_poisoned():
     assert str(double_canonical("0.0")) == "0.0"
     assert double_canonical("-0.0").is_signed()
     assert not double_canonical("0.0").is_signed()
+
+
+def _loads_per_call(text):
+    # the per-call decoder parse_json used to build: its values and
+    # errors are the contract the shared decoder must keep
+    import json
+
+    from json_schema_spark.core.jsonvalue import _reject_constant
+    return json.loads(text, parse_float=double_canonical,
+                      parse_constant=_reject_constant)
+
+
+def _outcome(fn, text):
+    try:
+        return "ok", repr(fn(text))
+    except Exception as e:  # noqa: BLE001 — the error itself is compared
+        return type(e).__name__, str(e)
+
+
+PARSE_INPUTS = [
+    '{"id": 7, "name": "x", "tags": ["a", "b"], "score": 19.99, "ok": true}',
+    '{"children": [{"children": []}, {"v": null}]}',
+    "-0.0", "0.0", "1e400", "-1e400", "1e-330", "12345678901234567890",
+    "1.0000000000000000000000000001", '"\\ud83d\\ude00"', " [1, 2] ",
+    # error cases
+    "\ufeff{}", "NaN", "[Infinity]", "-Infinity", "", "{", '{"a": 1,}',
+    "[1] 2", "01", '"\\x"', "tru",
+    # non-str inputs take json.loads's own path
+    b'{"a": 1.5}', b"\xef\xbb\xbf[1]", bytearray(b"[0.1]"), b"\xff", 12, None,
+]
+
+
+@pytest.mark.parametrize("text", PARSE_INPUTS, ids=repr)
+def test_parse_json_matches_per_call_decoder(text):
+    assert _outcome(parse_json, text) == _outcome(_loads_per_call, text)
+
+
+def test_parse_json_matches_per_call_decoder_on_deep_nesting():
+    text = "[" * 100_000 + "]" * 100_000
+    assert _outcome(parse_json, text) == _outcome(_loads_per_call, text)

@@ -62,3 +62,25 @@ def test_udf_path_agrees(spark, dialect, fmt, group):
     out = sv.apply_json(df, "doc", with_violations=False).orderBy("i").collect()
     got = [r["valid"] for r in out]
     assert got == expect, f"udf path disagrees: {list(zip(docs, got, expect))}"
+
+
+@pytest.mark.parametrize("with_violations", [True, False])
+def test_udf_path_keeps_user_column_named_res(spark, with_violations):
+    """The kernel's struct result rides in a reserved column; a user
+    column called ``_res`` is neither replaced nor dropped."""
+    sv = SparkValidator({"properties": {"a": {"type": "integer"}}}, engine="udf")
+    df = spark.createDataFrame([(1, '{"a": 1}', "keep1"), (2, '{"a": "x"}', "keep2")],
+                               ["id", "doc", "_res"])
+    extra = ["violations"] if with_violations else []
+
+    out = sv.apply_json(df, "doc", with_violations=with_violations)
+    assert out.columns == ["id", "doc", "_res", "valid"] + extra
+    rows = out.orderBy("id").collect()
+    assert [(r["_res"], r["valid"]) for r in rows] == [("keep1", True), ("keep2", False)]
+
+    typed = spark.createDataFrame([(1, None, "keep1"), (2, "x", "keep2")],
+                                  "id long, a string, _res string")
+    out = sv.apply_table(typed, columns=["a"], with_violations=with_violations)
+    assert out.columns == ["id", "a", "_res", "valid"] + extra
+    rows = out.orderBy("id").collect()
+    assert [(r["_res"], r["valid"]) for r in rows] == [("keep1", True), ("keep2", False)]
